@@ -1118,12 +1118,11 @@ object DedupPipeline {
       } else edges1.where(col("u") =!= col("v"))
 
     // One JOB per round: checkpoint the round's RDD and compute the
-    // convergence fingerprint (count + xor of a per-row 64-bit hash —
-    // internal detection only, same collision class as the old
-    // bit_xor(xxhash64) agg) INSIDE the materializing runJob, then wrap
-    // the checkpointed RDD back as a flat-plan DataFrame. The old form
-    // paid a second agg job per round just to read back what the
-    // materialization had already streamed past.
+    // convergence fingerprint (count + xor of starEdgeHash per row)
+    // INSIDE the materializing runJob, then wrap the checkpointed RDD back
+    // as a flat-plan DataFrame. The old form paid a second agg job per
+    // round just to read back what the materialization had already
+    // streamed past.
     val edgeSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("u",
         org.apache.spark.sql.types.StringType, nullable = true),
@@ -1145,7 +1144,7 @@ object DedupPipeline {
             val hu = if (r.isNullAt(0)) 0 else r.getUTF8String(0).hashCode
             val hv = if (r.isNullAt(1)) 0 else r.getUTF8String(1).hashCode
             c += 1
-            x ^= (hu.toLong << 32) ^ (hv.toLong & 0xffffffffL)
+            x ^= starEdgeHash(hu, hv)
           }
           (c, x)
         })
@@ -1168,6 +1167,13 @@ object DedupPipeline {
       .select(col("conv_id"),
         coalesce(col("root"), col("conv_id")).as("cluster_id"))
   }
+
+  /** One edge's term in the star rounds' XOR fingerprint: the 32-bit hashes
+    * of (u, v) packed into one long, then murmur3 fmix64. Unmixed, the XOR
+    * of packed pairs splits into an XOR of u-hashes and an XOR of v-hashes,
+    * which a label swap {(a,x),(b,y)} -> {(a,y),(b,x)} leaves unchanged. */
+  private[pipeline] def starEdgeHash(hu: Int, hv: Int): Long =
+    MinHasher.mix64((hu.toLong << 32) | (hv.toLong & 0xffffffffL))
 
   // ---- id-keyed internal path --------------------------------------------
   //

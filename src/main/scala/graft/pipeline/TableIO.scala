@@ -1,6 +1,9 @@
 package graft.pipeline
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Storage seam (SURVEY §2b P1/P11): the north star writes Iceberg tables;
   * this sandbox has no Iceberg runtime jars, so the default implementation
@@ -65,17 +68,28 @@ final class CatalogTableIO(prefix: String) extends TableIO {
     spark.catalog.tableExists(tbl(name))
 }
 
+/** Parquet directories under `root`. A table this instance wrote is read
+  * back with the schema it was written with: parquet schema inference is a
+  * Spark job of its own, and the checkpointed pipeline reads every stage
+  * back right after writing it. An append forgets the table's schema, so a
+  * table grown by appends is inferred from its files again. */
 final class ParquetTableIO(root: String) extends TableIO {
   private def path(name: String) = s"$root/$name"
+  private val written = new ConcurrentHashMap[String, StructType]()
 
-  override def write(df: DataFrame, name: String): Unit =
+  override def write(df: DataFrame, name: String): Unit = {
+    written.remove(name)
     df.write.mode(SaveMode.Overwrite).parquet(path(name))
+    written.put(name, df.schema)
+  }
 
-  override def append(df: DataFrame, name: String): Unit =
+  override def append(df: DataFrame, name: String): Unit = {
+    written.remove(name)
     df.write.mode(SaveMode.Append).parquet(path(name))
+  }
 
   override def read(spark: SparkSession, name: String): DataFrame =
-    spark.read.parquet(path(name))
+    Option(written.get(name)).fold(spark.read)(spark.read.schema(_)).parquet(path(name))
 
   override def exists(spark: SparkSession, name: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path(name), "_SUCCESS")

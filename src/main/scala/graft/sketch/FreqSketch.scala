@@ -77,13 +77,14 @@ final class FreqSketch[T] private (
     * walk is equally layout-dependent — and every correctness contract
     * (estimate/LB/UB, NFN) holds for ANY positive subtracted value; only
     * the amortized shrink bound rides on the median, and the reference
-    * accepts the same 1024-sample approximation. */
-  private[sketch] def purgeMedian(): Long = {
+    * accepts the same 1024-sample approximation. `counters` is the map's
+    * values in iteration order; the sample is read from it and nothing
+    * more. */
+  private[sketch] def purgeMedian(counters: Iterator[Long] = counts.valuesIterator): Long = {
     val limit = math.min(counts.size, purgeSampleSize)
     val values = new Array[Long](limit)
-    val it = counts.valuesIterator
     var i = 0
-    while (i < limit) { values(i) = it.next(); i += 1 }
+    while (i < limit) { values(i) = counters.next(); i += 1 }
     QuickSelect.select(values, limit / 2)
   }
 

@@ -62,8 +62,9 @@ class CatalogTableIOSpec extends AnyFunSuite {
     assert(r2.computedStages.isEmpty, s"resume recomputed: ${r2.computedStages}")
     assert(a1.map(_.toString).sameElements(a2.map(_.toString)))
 
-    // lineage metrics landed as a catalog table
+    // lineage metrics landed as a catalog table, and match the stage tables
     val m = r2.metrics(spark)
     assert(m.where(col("stage") === "cluster_assignments").count() > 0)
+    LineageOracle.check(m, s => io.read(spark, s"runA/$s"), tdf.count())
   }
 }

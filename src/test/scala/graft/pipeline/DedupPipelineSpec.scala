@@ -134,6 +134,21 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(d1 === d2)
   }
 
+  test("star-round fingerprint changes under a label swap") {
+    // {(a,x),(b,y)} -> {(a,y),(b,x)}: same edge count, same labels on each
+    // side — only the pairing moved, which is what a star round can change
+    def h(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s).hashCode
+    def fp(edges: Seq[(String, String)]): Long =
+      edges.map { case (u, v) => DedupPipeline.starEdgeHash(h(u), h(v)) }.reduce(_ ^ _)
+    assert(fp(Seq("a" -> "x", "b" -> "y")) !== fp(Seq("a" -> "y", "b" -> "x")))
+    val rnd = new java.util.Random(5)
+    for (_ <- 1 to 1000) {
+      val Seq(a, b, x, y) = Seq.fill(4)(s"n${rnd.nextInt(1 << 20)}")
+      if (a != b && x != y)
+        assert(fp(Seq(a -> x, b -> y)) !== fp(Seq(a -> y, b -> x)), s"$a $b $x $y")
+    }
+  }
+
   test("local contraction: cross-partition chain still merges to one min-id component") {
     import spark.implicits._
     // one 400-node path graph: consecutive edges land in DIFFERENT

@@ -93,6 +93,40 @@ class DocsSortedSpec extends AnyFunSuite {
     assert(m("c2") === (("c2-solo", 1, 7L)))
   }
 
+  test("sum(n_turns) is the input row count: nulls, null turn_idx, tie runs") {
+    // the checkpointed docs stage records sum(n_turns) as its rows_in, so
+    // every transcript row must land in exactly one doc's n_turns
+    import spark.implicits._
+    def ts(ms: Long) = new Timestamp(ms)
+    val rows = Seq(
+      // null conv_id is its own group
+      (null.asInstanceOf[String], Some(0), "user", "null-a", "t", ts(1000L)),
+      (null.asInstanceOf[String], Some(1), "user", null, "t", ts(2000L)),
+      // null turn_idx, alone and next to set ones
+      ("c1", None, "user", "no-idx", "t", ts(500L)),
+      ("c1", None, "user", "no-idx-2", "t", ts(600L)),
+      ("c1", Some(0), "user", "first", "t", ts(1000L)),
+      ("c2", None, "user", "only-null-idx", "t", ts(1000L)),
+      // tie runs on (turn_idx) and on (turn_idx, ts)
+      ("c3", Some(0), "user", "b", "t", ts(2000L)),
+      ("c3", Some(0), "user", "a", "t", ts(2000L)),
+      ("c3", Some(0), "user", null, "t", ts(2000L)),
+      ("c3", Some(1), "user", "z", "t", ts(1000L)),
+      ("c3", Some(1), "user", "y", "t", ts(500L)),
+      // null and empty text
+      ("c4", Some(0), "user", null, "t", ts(1000L)),
+      ("c4", Some(1), "user", "", "t", ts(2000L)))
+    val tdf = rows.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val dir = java.nio.file.Files.createTempDirectory("graft-docs-turns").toString
+    BucketedCorpus.write(tdf, dir, buckets = 2)
+    val streamed = BucketedCorpus.readDocs(spark, dir)
+    assert(!streamed.queryExecution.executedPlan.toString.contains("Aggregate"))
+    val grouped = DedupPipeline.buildDocs(tdf)
+    for ((name, docs) <- Seq("buildDocsSorted" -> streamed, "buildDocs" -> grouped))
+      assert(docs.agg(sum(col("n_turns"))).head().getLong(0) === rows.size.toLong, name)
+    assertIdentical(streamed, grouped)
+  }
+
   test("direct unaligned file scan is rejected loudly (file-split hazard)") {
     // reading the bucketed table WITHOUT readDocs' planning window: the bare
     // projection has no distribution requirement, so Spark plans a regular
