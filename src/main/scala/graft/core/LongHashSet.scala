@@ -11,7 +11,7 @@ package graft.core
   * per-pair intersection walks exactly `size` longs sequentially on one
   * side (the table scan would touch ≥ 2× slots); SimHash's per-bit vote is
   * order-insensitive, so fingerprints over `elems` equal fingerprints over
-  * the sorted form the merge kernel uses. */
+  * the sorted shingle arrays of `Shingles.shinglesOf`. */
 final class LongHashSet(expected: Int) {
 
   private[this] var table = new Array[Long](LongHashSet.tableCap(expected))

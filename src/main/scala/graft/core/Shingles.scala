@@ -47,39 +47,10 @@ object Shingles {
     if (w == a.length) a else Arrays.copyOf(a, w)
   }
 
-  /** Shingle hashes written into `buf` (caller guarantees capacity
-    * ≥ max(1, len−k+1)), then sorted-distinct IN PLACE; returns the
-    * retained count. Zero-allocation variant for the pair-verification
-    * hot loop — the allocating `shingles` churned ~16 KB per pair and
-    * the resulting GC pressure capped the verify stage's scaling at 32
-    * cores. */
-  def shinglesInto(base: AnyRef, offset: Long, len: Int, k: Int, seed: Long,
-                   buf: Array[Long]): Int = {
-    if (len < k) {
-      if (len == 0) return 0
-      buf(0) = Murmur3x128.hash64(base, offset, len, seed)
-      return 1
-    }
-    val n = len - k + 1
-    var i = 0
-    while (i < n) {
-      buf(i) = Murmur3x128.hash64(base, offset + i, k, seed)
-      i += 1
-    }
-    if (n <= 1) return n
-    Arrays.sort(buf, 0, n)
-    var w = 1
-    i = 1
-    while (i < n) {
-      if (buf(i) != buf(w - 1)) { buf(w) = buf(i); w += 1 }
-      i += 1
-    }
-    w
-  }
-
   /** Distinct shingle hashes inserted into `set` (caller resets it with the
-    * expected window count first) — the probe-kernel counterpart of
-    * `shinglesInto`: no sort, dedup happens in the hash table. */
+    * expected window count first): the zero-allocation form of `shingles`
+    * for the pair-verification hot loop. No sort; dedup happens in the
+    * hash table. */
   def shinglesIntoSet(base: AnyRef, offset: Long, len: Int, k: Int, seed: Long,
                       set: LongHashSet): Unit = {
     if (len < k) {
@@ -95,14 +66,11 @@ object Shingles {
     }
   }
 
-  /** Exact Jaccard of two sorted-distinct arrays via merge intersection —
-    * no allocation (SURVEY §4.3: array_intersect+size allocates; this is the
-    * verification hot loop). */
-  def jaccardSorted(a: Array[Long], b: Array[Long]): Double =
-    jaccardSorted(a, a.length, b, b.length)
-
-  /** Length-aware variant over scratch buffers' first na/nb entries. */
-  def jaccardSorted(a: Array[Long], na: Int, b: Array[Long], nb: Int): Double = {
+  /** Exact Jaccard of two sorted-distinct arrays via merge intersection,
+    * no allocation: the reference Jaccard (OracleDedup and the pair-verify
+    * kernel specs check `pair_verify` against it). */
+  def jaccardSorted(a: Array[Long], b: Array[Long]): Double = {
+    val na = a.length; val nb = b.length
     if (na == 0 && nb == 0) return 1.0
     if (na == 0 || nb == 0) return 0.0
     var i = 0; var j = 0; var inter = 0

@@ -94,32 +94,20 @@ object PairVerify {
     * tens of MB per executor thread for the application lifetime. */
   private final val RetainCap = 1 << 19 // 512k shingles ≈ 4 MB per buffer
 
-  /** Kernel selection: "probe" (open-addressing hash set + probe
-    * intersect — default) vs "merge" (sorted-shingle arrays + merge
-    * intersect). Identical results (same inter/union integers → same
-    * doubles; SimHash votes are order-insensitive — VerifyKernelSpec).
-    * Default from the same-sitting 8/32-thread A/B (VerifyKernelBench,
-    * BENCH/BASELINE.md r5): probe wins 21-37% in BOTH regimes — fresh-B
-    * (no sort on recompute) and memo-hit (the merge's 50/50 x<y branch
-    * mispredicts per element; the probe's near-dup hit branch is
-    * predictable and the table is L2-resident at typical doc sizes).
-    * SPARK_GRAFT_VERIFY_KERNEL=merge re-selects the loser per JVM for
-    * re-measurement. */
-  private[graft] val KernelProbe: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_VERIFY_KERNEL", "probe") == "probe"
-
-  /** One side's reusable state: the shingle buffer plus a LAST-SEEN memo.
+  /** One side's reusable state: the shingle set plus a LAST-SEEN memo.
     * The verify stream arrives from a sort-merge join, so consecutive rows
     * repeat one side's doc (a doc in p pairs is shingled once, not p
     * times); the memo is gated by an exact byte compare (memcmp ≪ the
-    * rolling-hash shingling + sort it skips), keyed with (k, seed) so a
-    * config change in the same session can never serve stale shingles. */
-  private[graft] final class Side(probe: Boolean) {
-    private var buf: Array[Long] = new Array[Long](2048) // retained, ≤ RetainCap
-    var res: Array[Long] = buf // the array holding the CURRENT row's shingles
-    private val pset: graft.core.LongHashSet =
-      if (probe) new graft.core.LongHashSet(2048) else null
-    var set: graft.core.LongHashSet = pset // the CURRENT row's shingle set (probe kernel)
+    * rolling-hash shingling it skips), keyed with (k, seed) so a config
+    * change in the same session can never serve stale shingles.
+    *
+    * The shingle set is an open-addressing hash set intersected by
+    * probing: in the same-sitting 8/32-thread A/B it beat sorted arrays
+    * with a merge intersect by 21-37%, fresh and memo-hit, with identical
+    * results (BENCH/BASELINE.md r5). */
+  private[graft] final class Side {
+    private val pset = new graft.core.LongHashSet(2048) // retained, bounded
+    var set: graft.core.LongHashSet = pset // the CURRENT row's shingle set
     var key: Array[Byte] = new Array[Byte](0) // copied bytes of the memoized doc
     var keyLen: Int = -1
     var n: Int = 0 // shingle count of the memoized doc
@@ -127,8 +115,8 @@ object PairVerify {
     private var k: Int = -1
     private var seed: Long = 0L
 
-    /** Memo valid for `d`? On a hit `res`/`n`/`fp` already describe it
-      * (only recompute writes buf, and it updates the memo key with it). */
+    /** Memo valid for `d`? On a hit `set`/`n`/`fp` already describe it
+      * (only recompute writes the set, and it updates the memo key with it). */
     def hit(d: UTF8String, kk: Int, sd: Long): Boolean =
       keyLen == d.numBytes && k == kk && seed == sd &&
         org.apache.spark.unsafe.array.ByteArrayMethods.arrayEquals(
@@ -136,7 +124,7 @@ object PairVerify {
           d.getBaseObject, d.getBaseOffset, d.numBytes)
 
     /** Recompute shingles + fingerprint for `d` and memoize — unless the
-      * doc exceeds RetainCap: then the buffer is transient (never retained,
+      * doc exceeds RetainCap: then the set is transient (never retained,
       * ADVICE r3) and the memo is invalidated instead. */
     def recompute(d: UTF8String, kk: Int, sd: Long): Unit = {
       val need = math.max(1, d.numBytes)
@@ -153,51 +141,39 @@ object PairVerify {
           key, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, d.numBytes)
         keyLen = d.numBytes; k = kk; seed = sd
       }
-      if (probe) {
-        // transient: start modest and let add() grow by doubling to the
-        // ACTUAL distinct-shingle count — sizing by numBytes up front would
-        // allocate a 2-4x-numBytes table plus a numBytes elems array
-        // (~25-40 bytes per doc byte) for an outlier doc whose distinct
-        // count is typically far smaller; pset stays bounded either way
-        if (transient0) set = new graft.core.LongHashSet(1 << 16)
-        else { set = pset; set.reset(need) }
-        graft.core.Shingles.shinglesIntoSet(
-          d.getBaseObject, d.getBaseOffset, d.numBytes, kk, sd, set)
-        n = set.size
-        fp = graft.core.SimHash64.fingerprint(set.elems, n)
-      } else {
-        if (transient0) res = new Array[Long](need) // transient; buf stays bounded
-        else {
-          if (buf.length < need) buf = new Array[Long](Integer.highestOneBit(math.max(need, 2) - 1) << 1)
-          res = buf
-        }
-        n = graft.core.Shingles.shinglesInto(d.getBaseObject, d.getBaseOffset, d.numBytes, kk, sd, res)
-        fp = graft.core.SimHash64.fingerprint(res, n)
-      }
+      // transient: start modest and let add() grow by doubling to the
+      // ACTUAL distinct-shingle count — sizing by numBytes up front would
+      // allocate a 2-4x-numBytes table plus a numBytes elems array
+      // (~25-40 bytes per doc byte) for an outlier doc whose distinct
+      // count is typically far smaller; pset stays bounded either way
+      if (transient0) set = new graft.core.LongHashSet(1 << 16)
+      else { set = pset; set.reset(need) }
+      graft.core.Shingles.shinglesIntoSet(
+        d.getBaseObject, d.getBaseOffset, d.numBytes, kk, sd, set)
+      n = set.size
+      fp = graft.core.SimHash64.fingerprint(set.elems, n)
     }
   }
 
-  private[graft] final class Scratch(probe: Boolean) {
-    val a = new Side(probe)
-    val b = new Side(probe)
+  private[graft] final class Scratch {
+    val a = new Side
+    val b = new Side
   }
   private val scratch: ThreadLocal[Scratch] =
-    ThreadLocal.withInitial(() => new Scratch(KernelProbe))
+    ThreadLocal.withInitial(() => new Scratch)
 
-  /** Kernel body on an explicit scratch — the A/B harness and equivalence
-    * spec drive both kernels in one JVM through this. */
+  /** Kernel body on an explicit scratch — the kernel specs drive memo runs
+    * through this. */
   private[graft] def computeWith(s: Scratch, a: UTF8String, b: UTF8String,
-                                 k: Int, seed: Long, probe: Boolean): (Double, Int) = {
+                                 k: Int, seed: Long): (Double, Int) = {
     if (!s.a.hit(a, k, seed)) s.a.recompute(a, k, seed)
     if (!s.b.hit(b, k, seed)) s.b.recompute(b, k, seed)
-    val j =
-      if (probe) graft.core.LongHashSet.jaccardProbe(s.a.set, s.b.set)
-      else graft.core.Shingles.jaccardSorted(s.a.res, s.a.n, s.b.res, s.b.n)
-    (j, graft.core.SimHash64.hammingDist(s.a.fp, s.b.fp))
+    (graft.core.LongHashSet.jaccardProbe(s.a.set, s.b.set),
+      graft.core.SimHash64.hammingDist(s.a.fp, s.b.fp))
   }
 
   def compute(a: UTF8String, b: UTF8String, k: Int, seed: Long): org.apache.spark.sql.catalyst.InternalRow = {
-    val (j, dist) = computeWith(scratch.get(), a, b, k, seed, KernelProbe)
+    val (j, dist) = computeWith(scratch.get(), a, b, k, seed)
     org.apache.spark.sql.catalyst.InternalRow(j, dist)
   }
 }

@@ -48,11 +48,6 @@ object DedupPipeline {
     new java.util.concurrent.ConcurrentHashMap[SparkSession,
       java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
 
-  /** Verify-stage candidate-docs persist (VerifyProbe winner, r5);
-    * SPARK_GRAFT_VERIFY_DPERSIST=0 re-selects the inline loser per JVM. */
-  private def dPersist: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_VERIFY_DPERSIST", "1") != "0"
-
   private def trackPersist(df: DataFrame): DataFrame = {
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     trackedPersists
@@ -173,7 +168,7 @@ object DedupPipeline {
     // text to a java.lang.String, built docs in a StringBuilder, then paid
     // createDataFrame's Row→InternalRow re-encode of every doc — at 1M
     // convs the docs stage spent 46 of its 196 core-seconds in GC
-    // (BenchStages r6 baseline). This form reads the scan's UTF8Strings
+    // (BENCH/BASELINE.md r6 baseline). This form reads the scan's UTF8Strings
     // zero-copy, buffers turn bytes in REUSED scratch arrays (zero per-turn
     // allocation), and emits InternalRows directly — identical output
     // (DocsSortedSpec byte-equality incl. ties, nulls, non-BMP lengths).
@@ -360,21 +355,6 @@ object DedupPipeline {
     docs.select(col("conv_id"),
       graft.functions.simhash64(col("doc"), cfg.shingleK, cfg.seed).as("simhash"))
 
-  /** Slice-1 UDF variant, kept for benchmarking expression-vs-UDF. */
-  def signaturesUdf(docs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val k = cfg.shingleK; val n = cfg.numHashes; val seed = cfg.seed
-    val sigUdf = udf { (text: String) =>
-      val sh = Shingles.shinglesOf(if (text == null) "" else text, k, seed)
-      val mh = graft.functions.TextSignatureExpr.hasher(n, seed)
-      (sh, mh.signature(sh), SimHash64.fingerprint(sh))
-    }
-    docs.withColumn("sig", sigUdf(col("doc")))
-      .select(col("conv_id"), col("doc"), col("doc_len"),
-        col("sig._1").as("shingles"),
-        col("sig._2").as("minhash"),
-        col("sig._3").as("simhash"))
-  }
-
   /** P5: signatures → bands(conv_id, band_idx, band_key).
     * band_key folds the band index in, so one global shuffle key space
     * serves all bands. Map-side only. */
@@ -393,6 +373,12 @@ object DedupPipeline {
     * deterministic total order with 8-byte primary sort keys (see
     * chainStar below for the measurement); output pairs are re-oriented
     * a < b lexicographically.
+    *
+    * The windowed form won its A/B against a hash-aggregated variant that
+    * emitted the same edges from per-bucket sorted member arrays (300k
+    * convs, identical 110,344-pair output: window 3.11 s vs agg 3.25 s at
+    * 32 cores, 4.77 s vs 5.74 s at 8; BENCH/BASELINE.md), and it streams
+    * hot buckets in O(1) memory where the aggregate materializes them.
     *
     * Connectivity assumption (probabilistic, NOT structural): every bucket
     * member gets a direct edge to the bucket's first member under the
@@ -413,45 +399,6 @@ object DedupPipeline {
     * boilerplate bucket is bounded at bucket/S — and connectivity across
     * sub-buckets is restored by chaining the S sub-bucket minima in a
     * second, tiny window pass (≤ S rows per band key). */
-  /** Chain+star edges generated map-side from a SORTED bucket member
-    * array (no window sort): chain = adjacent members, star = first
-    * member to every member beyond the second (the chain already links
-    * first to member 2). Identical edge set to the windowed chainStar
-    * when the array uses the same bucket order. */
-  private[pipeline] def chainStarArrayEdges(ms: Column): Column = concat(
-    filter(zip_with(ms, slice(ms, lit(2), greatest(size(ms) - 1, lit(1))),
-      (a, b) => struct(a.as("a"), b.as("b"))), p => p.getField("b").isNotNull),
-    transform(slice(ms, lit(3), greatest(size(ms) - 2, lit(1))),
-      y => struct(element_at(ms, 1).as("a"), y.as("b"))))
-
-  /** A/B alternative to candidatePairs (unsalted path): hash-aggregate
-    * per-bucket sorted member arrays, then emit chain+star edges
-    * map-side — replaces the global (band_key, conv_id) window SORT of
-    * the 9.6M-row band stream with a hash aggregation. Bucket arrays are
-    * materialized per key, so this variant is for salt-bounded/advised
-    * streams (the windowed form streams hot buckets in O(1) memory).
-    *
-    * MEASURED (graft.tools.CandAB, 300k convs, identical 110,344-pair
-    * output, empty symmetric difference): window 3.11 s / agg 3.25 s at
-    * 32 cores, window 4.77 s / agg 5.74 s at 8 — the windowed form wins
-    * at both widths AND has the better skew story, so it stays the
-    * production path; this one remains as the measured alternative. */
-  private[graft] def candidatePairsAgg(bands: DataFrame, cfg: DedupConfig): DataFrame = {
-    bands.groupBy(col("band_key"))
-      // members sorted by (xxhash64(conv_id), conv_id) — the same bucket
-      // order the windowed production path uses, so the emitted edge set
-      // is identical
-      .agg(transform(
-        sort_array(collect_list(struct(xxhash64(col("conv_id")).as("h"), col("conv_id")))),
-        s => s.getField("conv_id")).as("ms"))
-      .where(size(col("ms")) >= 2)
-      .select(explode(chainStarArrayEdges(col("ms"))).as("e"))
-      .where(col("e.a") =!= col("e.b"))
-      .select(least(col("e.a"), col("e.b")).as("a"),
-        greatest(col("e.a"), col("e.b")).as("b"))
-      .distinct()
-  }
-
   def candidatePairs(bands: DataFrame, cfg: DedupConfig): DataFrame = {
     val salted = if (cfg.bandSalt > 1) {
       bands.withColumn("salt", pmod(xxhash64(col("conv_id")), lit(cfg.bandSalt)))
@@ -463,7 +410,7 @@ object DedupPipeline {
       // conv_id: chain+star connectivity holds under ANY deterministic
       // total order, and the window sort — this stage's dominant cost —
       // compares one 8-byte long (ties broken by the string) instead of
-      // UTF8 strings. Measured (CandAB, 1M-conv band stream): 13.8 → 11.1 s
+      // UTF8 strings. Measured (1M-conv band stream): 13.8 → 11.1 s
       // at 32 cores, 19.6 → 18.9 s at 8; stage 8→32 ratio 0.36 → 0.43.
       val ord = Seq(col("h"), col("conv_id"))
       val w = Window.partitionBy(pcols: _*).orderBy(ord: _*)
@@ -572,12 +519,15 @@ object DedupPipeline {
     val candIds = spread.select(col("a").as("conv_id"))
       .unionByName(spread.select(col("b").as("conv_id")))
       .distinct()
-    // persisted for the same reason as the id path (verifyPairsById): both
-    // side joins consume d, and recomputing it re-scans the full docs
-    // cache twice (VerifyProbe A/B — see verifyPairsById).
-    val d0 = docs.select(col("conv_id"), col("doc"))
-      .join(candIds, Seq("conv_id"), "left_semi")
-    val d = if (dPersist) trackPersist(d0) else d0
+    // d (the candidate-doc subset) is consumed by BOTH side joins below.
+    // Unpersisted, each join re-scans the full docs input through its own
+    // semi-join build. Persisting d scans docs once and feeds both joins
+    // from the smaller candidates-only cache: interleaved r5 legs at 32
+    // cores ran 8.9-13.6 s vs 12.6-24.1 s inline, a wash at 8 cores
+    // (BENCH/BASELINE.md). At 10^12 turns candidates are a tiny fraction
+    // of the corpus, so the extra cache is small.
+    val d = trackPersist(docs.select(col("conv_id"), col("doc"))
+      .join(candIds, Seq("conv_id"), "left_semi"))
 
     spread
       .join(d.select(col("conv_id").as("a"), col("doc").as("doc_a")), Seq("a"))
@@ -755,46 +705,6 @@ object DedupPipeline {
                            subBucketSize: Int = 64,
                            stopFpFreq: Int = 4096,
                            tier2PairRecall: Boolean = false): DataFrame = {
-    // id-keyed internals (same rationale as the minhash path): the tier-1
-    // pair stream is quadratic in template-family size — 6.5M weighted
-    // instances from 5k docs at sf0.1 — and every explode/shuffle/groupBy
-    // row carried two conv_id strings. Re-keying the SAME generic body by
-    // xxhash64(conv_id) makes those rows three fixed longs; the survivor
-    // set (3-4 orders of magnitude smaller) maps back through a join and
-    // re-orients lexicographically. Tier-1 all-pairs evidence and cluster
-    // connectivity are key-insensitive and unchanged; the tier-2 sub-bucket
-    // split hashes the key VALUE (pmod(xxhash64(key, band), S)), so the
-    // tier-2 probabilistic pair sample differs between the long-keyed and
-    // string-fallback paths (ADVICE r4) — A/B runs via
-    // SPARK_GRAFT_STRING_PATH compare recall, not candidate identity.
-    // Guarded by the same uniqueness check + string fallback as run().
-    val u = docs.agg(count(lit(1)), count_distinct(xxhash64(col("conv_id")))).head()
-    if (u.getLong(0) == u.getLong(1) && !sys.env.contains("SPARK_GRAFT_STRING_PATH")) {
-      val idDocs = docs.select(xxhash64(col("conv_id")).as("conv_id"), col("doc"))
-      val idPairs = winnowCandidatePairsKeyed(idDocs, k, w, cfg, minFpOverlap,
-        allPairsCap, subBucketSize, stopFpFreq, tier2PairRecall)
-      val idMap = docs.select(xxhash64(col("conv_id")).as("k"), col("conv_id"))
-      idPairs
-        .join(idMap.select(col("k").as("a"), col("conv_id").as("ca")), Seq("a"))
-        .join(idMap.select(col("k").as("b"), col("conv_id").as("cb")), Seq("b"))
-        .select(least(col("ca"), col("cb")).as("a"),
-          greatest(col("ca"), col("cb")).as("b"))
-    } else {
-      winnowCandidatePairsKeyed(docs, k, w, cfg, minFpOverlap,
-        allPairsCap, subBucketSize, stopFpFreq, tier2PairRecall)
-    }
-  }
-
-  /** The winnow candidate body, generic over the `conv_id` column type
-    * (string corpus keys or 64-bit ids — every operation on the key is
-    * type-agnostic: sort_array, xxhash64 salting, least/greatest). */
-  private def winnowCandidatePairsKeyed(docs: DataFrame, k: Int, w: Int,
-                           cfg: DedupConfig,
-                           minFpOverlap: Double,
-                           allPairsCap: Int,
-                           subBucketSize: Int,
-                           stopFpFreq: Int,
-                           tier2PairRecall: Boolean): DataFrame = {
     // bucket sizes FIRST, member arrays only for buckets the tiers will
     // read (m ∈ [2, stopFpFreq]): stop-fingerprint buckets — template
     // fingerprints shared by up to the whole corpus — previously paid a
@@ -1055,16 +965,8 @@ object DedupPipeline {
     // 256 in an interleaved A/B (star_on 3.1-3.2 s vs 2.4-2.5 s; 64
     // partitions likewise) — the star wall at this size is the sequential
     // job barriers per run, not per-task launch overhead, and 256 small
-    // tasks overlap stragglers/GC pauses better than 32 larger sorts. The
-    // env override stays for future same-sitting A/Bs; the default keeps
-    // the session conf (scoped-conf plumbing retained so an override is
-    // honored by every round exchange, then restored before the lazy
-    // final join below).
-    val starParts = sys.env.get("SPARK_GRAFT_CC_STAR_PARTS").map(_.toInt)
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", starParts.toString)
-    val converged0 = try {
+    // tasks overlap stragglers/GC pauses better than 32 larger sorts. So
+    // the round exchanges keep the session's shuffle-partition count.
 
     // Round-latency audit (r6): at 357k edges the star wall is the chain
     // of sequential job barriers, not shuffle bytes — so the up-front
@@ -1157,11 +1059,9 @@ object DedupPipeline {
       iter += 1
     }
     if (ccProf) println(s"[cc] global rounds: $iter")
-    edges
-    } finally spark.conf.set("spark.sql.shuffle.partitions", savedParts)
 
     // After convergence every edge is (member, root) with root = component min.
-    val roots = converged0.groupBy(col("u")).agg(min(col("v")).as("root"))
+    val roots = edges.groupBy(col("u")).agg(min(col("v")).as("root"))
     allNodes.select(col("conv_id"))
       .join(roots.select(col("u").as("conv_id"), col("root")), Seq("conv_id"), "left")
       .select(col("conv_id"),
@@ -1175,125 +1075,6 @@ object DedupPipeline {
   private[pipeline] def starEdgeHash(hu: Int, hv: Int): Long =
     MinHasher.mix64((hu.toLong << 32) | (hv.toLong & 0xffffffffL))
 
-  // ---- id-keyed internal path --------------------------------------------
-  //
-  // Between the scan and the final output the pipeline keys docs by
-  // id = xxhash64(conv_id) instead of the conv_id string. Motivation is
-  // byte traffic through the shuffle/sort stages: at high core counts the
-  // shared memory bus is the scarce resource (BENCH/BASELINE.md MemBw:
-  // per-thread DRAM bandwidth at 32 threads is ~7x lower than at 8), so a
-  // fixed 8-byte sort/join key in place of a variable-length UTF8 string
-  // (+16 bytes/row in UnsafeRow terms, plus pointer-chasing comparisons)
-  // directly lifts the wide-cluster legs. The banding window ALREADY
-  // ordered members by xxhash64(conv_id) — the id path just stops carrying
-  // the string alongside its own hash. conv_id strings re-enter through
-  // the verification join (they ride with the doc text, which dominates
-  // that join's bytes anyway), so no extra mapping join exists.
-  //
-  // Correctness: ids are verified globally unique with one cheap
-  // aggregation over the persisted docs (count vs count_distinct; at 10^6
-  // docs the collision probability is ~3e-8, at 10^9 ~3e-2 — the check is
-  // NOT optional); on a collision run() falls back to the string path,
-  // whose candidate order (xxhash64(conv_id), conv_id) the id order
-  // refines, producing the identical edge set when ids are unique.
-
-  /** P5, id form: bands(id, band_key). Same band keys as `bands`. */
-  private[graft] def bandsById(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val r = cfg.rowsPerBand
-    val keys = transform(
-      sequence(lit(0), lit(cfg.bands - 1)),
-      i => xxhash64(i, slice(col("minhash"), i * lit(r) + lit(1), lit(r))))
-    sigs.select(col("id"), explode(keys).as("band_key"))
-  }
-
-  /** P6, id form: chain+star per band bucket ordered by id — the same
-    * total order as the public path (id IS xxhash64(conv_id)), minus the
-    * string payload in the window sort. Returns (a, b) ids, a < b. */
-  private[graft] def candidatePairsById(bands: DataFrame, cfg: DedupConfig): DataFrame = {
-    def chainStar(df: DataFrame, parts: Seq[String]): DataFrame = {
-      val pcols = parts.map(col)
-      val w = Window.partitionBy(pcols: _*).orderBy(col("id"))
-      val wAll = Window.partitionBy(pcols: _*).orderBy(col("id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // EXPLICIT repartition for the same wave-quantization reason as the
-      // string path's chainStar (r5): left to AQE, the window exchange on
-      // the fused sig+band stream coalesces to ~cores (34 partitions at 32
-      // cores on the 1M-conv corpus — BenchStages r6: 34 tasks, med 1.88 s
-      // → a 2-wave stage with a 2-task second wave, ~1.8 s of idle width).
-      // An explicit count is honored by AQE and satisfies the window's
-      // required distribution, so no second exchange appears.
-      val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
-      df
-        .repartition(nParts, pcols: _*)
-        .withColumn("prev", lag(col("id"), 1).over(w))
-        .withColumn("bmin", first(col("id")).over(wAll))
-        .select(explode(array(
-          struct(col("prev").as("a"), col("id").as("b")),
-          struct(when(col("bmin") =!= col("id") && col("bmin") =!= col("prev"),
-            col("bmin")).as("a"), col("id").as("b")))).as("e"))
-        .where(col("e.a").isNotNull)
-        .where(col("e.a") =!= col("e.b"))
-        .select(least(col("e.a"), col("e.b")).as("a"),
-          greatest(col("e.a"), col("e.b")).as("b"))
-    }
-    if (cfg.bandSalt > 1) {
-      val salted = bands.withColumn("salt", pmod(col("id"), lit(cfg.bandSalt.toLong)))
-      val within = chainStar(salted.select(col("band_key"), col("salt"), col("id")),
-        Seq("band_key", "salt"))
-      val minima = salted.groupBy(col("band_key"), col("salt"))
-        .agg(min(col("id")).as("id"))
-      val across = chainStar(minima.select(col("band_key"), col("id")), Seq("band_key"))
-      within.unionByName(across).distinct()
-    } else {
-      chainStar(bands.select(col("band_key"), col("id")), Seq("band_key")).distinct()
-    }
-  }
-
-  /** P7, id form: candidate (a, b) id pairs verified against docs carrying
-    * (id, conv_id, doc). Output schema and orientation (a < b
-    * lexicographically by conv_id) match `verifyPairs` exactly — the
-    * strings re-enter via the doc join, not a separate mapping. */
-  private[graft] def verifyPairsById(candPairs: DataFrame, docsWithId: DataFrame,
-                                        cfg: DedupConfig): DataFrame = {
-    val parts = candPairs.sparkSession.sessionState.conf.numShufflePartitions
-    val spread = trackPersist(candPairs.repartition(parts, col("a")))
-    val candIds = spread.select(col("a").as("id"))
-      .unionByName(spread.select(col("b").as("id")))
-      .distinct()
-    // d (the candidate-doc subset) is consumed by BOTH side joins below.
-    // Unpersisted, each join re-scans the FULL docs cache through its own
-    // semi-join build — at 32 threads that cached-text decode inflates
-    // ~5x in core-seconds (the same memory-stall pathology BandProbe found
-    // on the cached-minhash scan). Persisting d scans docs ONCE and feeds
-    // both joins from the (smaller, candidates-only) cache: VerifyProbe
-    // interleaved warm legs at 32 cores 8.9–13.6 s vs 12.6–24.1 s inline —
-    // wins every pair (1.35–2.7x) AND removes the bandwidth-weather
-    // variance of the double full-cache scan; ~wash at 8 cores (the scan
-    // isn't stalled there), so the gain lands on 8→32 efficiency. At 10^12
-    // turns candidates are a tiny fraction of the corpus, so the extra
-    // cache is small while the avoided second full-corpus pass dominates.
-    // SPARK_GRAFT_VERIFY_DPERSIST=0 re-selects the inline plan per JVM for
-    // future same-sitting A/Bs.
-    val d0 = docsWithId.select(col("id"), col("conv_id"), col("doc"))
-      .join(candIds, Seq("id"), "left_semi")
-    val d = if (dPersist) trackPersist(d0) else d0
-    spread
-      .join(d.select(col("id").as("a"), col("conv_id").as("ca"), col("doc").as("doc_a")), Seq("a"))
-      .join(d.select(col("id").as("b"), col("conv_id").as("cb"), col("doc").as("doc_b")), Seq("b"))
-      .withColumn("pv",
-        graft.functions.pair_verify(col("doc_a"), col("doc_b"), cfg.shingleK, cfg.seed))
-      .withColumn("jaccard", col("pv.jaccard"))
-      .where(col("jaccard") >= lit(cfg.tauJaccard))
-      .where(graft.functions.lcs_at_least(col("doc_a"), col("doc_b"),
-        least(lit(cfg.tauLcs),
-          (least(length(col("doc_a")), length(col("doc_b"))) / 2).cast("int"))))
-      .select(least(col("ca"), col("cb")).as("a"),
-        greatest(col("ca"), col("cb")).as("b"),
-        col("jaccard"),
-        col("pv.simhash_dist").as("simhash_dist"),
-        (col("pv.simhash_dist") <= lit(cfg.simhashMaxDist)).as("simhash_ok"))
-  }
-
   /** Full pipeline: transcripts → cluster_assignments(conv_id, cluster_id). */
   def run(transcripts: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
     runWithDocs(buildDocs(transcripts), cfg)
@@ -1303,54 +1084,21 @@ object DedupPipeline {
     * (BucketedCorpus.readDocs streams docs off the bucket sort). */
   def runWithDocs(docs0: DataFrame,
                   cfg: DedupConfig = DedupConfig()): DataFrame = {
-    // docs/sigs feed multiple downstream joins — persist so the signature
-    // computation runs once, not once per consumer (the checkpointed
-    // runner materializes to parquet instead)
-    val docs = trackPersist(docs0
-      .withColumn("id", xxhash64(col("conv_id"))))
-    // banding needs only the minhash; dropping the shingle arrays (~16x
-    // the minhash size) from the persisted footprint keeps the cache hot.
-    // Persist ONLY when the salted path consumes bands twice (within +
-    // across-minima): at bandSalt=1 (default) sigs has exactly one
-    // consumer, and caching it costs a ~1 GB columnar write PLUS a
-    // per-row array decode on re-read that is the pipeline's
-    // worst-scaling stage (BandProbe: the cached-minhash scan+explode
-    // runs 51 core-s at 8 threads but 190 at 32 — eff 0.27, pure memory
-    // stall). Unpersisted, text_signature fuses straight into the band
-    // explode + exchange in one codegen pass over the docs cache.
-    val sigs0 = docs.withColumn("sig",
-        graft.functions.text_signature(col("doc"), cfg.shingleK, cfg.numHashes, cfg.seed))
-      .select(col("id"), col("sig.minhash").as("minhash"))
+    // The same five stage functions CheckpointedDedup.run chains, with
+    // persists in place of its parquet checkpoints. docs feeds the
+    // signatures, the verify join and the CC node list.
+    val docs = trackPersist(docs0)
+    // Banding needs only the minhash. sigs is persisted ONLY when the
+    // salted path reads bands twice (within + across-minima): at
+    // bandSalt=1 (default) it has one consumer, and caching it costs a
+    // columnar write PLUS a per-row array decode on re-read that measured
+    // as the worst-scaling scan (51 core-s at 8 threads, 190 at 32;
+    // BENCH/BASELINE.md r5). Unpersisted, text_signature fuses straight
+    // into the band explode + exchange in one codegen pass over docs.
+    val sigs0 = signatures(docs, cfg).select(col("conv_id"), col("minhash"))
     val sigs = if (cfg.bandSalt > 1) trackPersist(sigs0) else sigs0
-    // measurement escape hatch: force the string path for A/B runs
-    val forceString = sys.env.contains("SPARK_GRAFT_STRING_PATH")
-    // xxhash64 collision (probability ~n²/2^65): identical semantics on
-    // string keys; candidate order (xxhash64(conv_id), conv_id) is the
-    // order the id path refines
-    def stringPath(): DataFrame = {
-      val sigsStr = trackPersist(signatures(docs, cfg)
-        .select(col("conv_id"), col("minhash")))
-      connectedComponents(
-        verifyPairs(candidatePairs(bands(sigsStr, cfg), cfg), docs, cfg),
-        docs.select(col("conv_id")))
-    }
-    if (forceString) stringPath()
-    else {
-      val assigned = connectedComponents(
-        verifyPairsById(candidatePairsById(bandsById(sigs, cfg), cfg), docs, cfg),
-        docs.select(col("conv_id")))
-      // xxhash64-injectivity audit, POST-HOC off the docs cache (one row
-      // per conversation). connectedComponents materializes the edge set
-      // internally, so by this point docs is cached and the agg is a
-      // ~0.1 s cache read. The former EAGER probe (rawIds.distinct + agg
-      // before the main DAG) was a whole extra column-pruned corpus scan
-      // plus a distinct shuffle — at 10^12 turns a full extra pass over
-      // the conv_id column, and a width-invariant ~1-3 s on every bench
-      // leg (ProbeCost: 3.2/2.9 s cold at 8/32 cores). Optimism is safe:
-      // on the ~2^-45 collision the id-keyed work is discarded unseen and
-      // the string-keyed pipeline recomputes identical semantics.
-      val u = docs.agg(count(lit(1)), count_distinct(col("id"))).head()
-      if (u.getLong(0) == u.getLong(1)) assigned else stringPath()
-    }
+    connectedComponents(
+      verifyPairs(candidatePairs(bands(sigs, cfg), cfg), docs, cfg),
+      docs.select(col("conv_id")))
   }
 }

@@ -33,11 +33,11 @@ object PlanDump {
       case "pipeline_candidates" =>
         val cfg = graft.core.DedupConfig()
         val sigs = spark.read.parquet(s"$dir/documents.parquet")
-          .select(xxhash64(col("doc_id").cast("string")).as("id"),
+          .select(col("doc_id").cast("string").as("conv_id"),
             graft.functions.text_signature(col("text"), cfg.shingleK,
               cfg.numHashes, cfg.seed).getField("minhash").as("minhash"))
-        Some(graft.pipeline.DedupPipeline.candidatePairsById(
-          graft.pipeline.DedupPipeline.bandsById(sigs, cfg), cfg))
+        Some(graft.pipeline.DedupPipeline.candidatePairs(
+          graft.pipeline.DedupPipeline.bands(sigs, cfg), cfg))
       case "pipeline_docs" =>
         sys.env.get("SPARK_GRAFT_BUCKETED_DIR")
           .map(d => graft.pipeline.BucketedCorpus.readDocs(spark, d))

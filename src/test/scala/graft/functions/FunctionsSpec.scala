@@ -48,9 +48,14 @@ class FunctionsSpec extends AnyFunSuite {
     val a = DedupPipeline.signatures(docs, cfg)
       .select("conv_id", "minhash", "simhash").collect()
       .map(r => r.getString(0) -> (r.getSeq[Long](1), r.getLong(2))).toMap
-    val b = DedupPipeline.signaturesUdf(docs, cfg)
-      .select("conv_id", "minhash", "simhash").collect()
-      .map(r => r.getString(0) -> (r.getSeq[Long](1), r.getLong(2))).toMap
+    // the driver-side reference: the same shingler, the hasher the
+    // expression builds, and the SimHash of the shingle set
+    val mh = TextSignatureExpr.hasher(cfg.numHashes, cfg.seed)
+    val b = docs.select("conv_id", "doc").collect().map { r =>
+      val sh = Shingles.shinglesOf(r.getString(1), cfg.shingleK, cfg.seed)
+      r.getString(0) -> (mh.signature(sh).toSeq, SimHash64.fingerprint(sh))
+    }.toMap
+    assert(a.size === 50)
     assert(a === b)
   }
 

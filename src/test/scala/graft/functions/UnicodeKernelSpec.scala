@@ -3,14 +3,16 @@ package graft.functions
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Shingles
+import graft.core.{Shingles, SimHash64}
 
-/** Multi-byte UTF-8 fuzz for the pair-verify kernels. The existing kernel
-  * fuzz draws from printable ASCII only; transcripts are full Unicode —
-  * CJK (3-byte), Cyrillic (2-byte) and emoji (4-byte, surrogate pairs in
-  * the JVM string) shift shingle boundaries onto every byte alignment.
-  * Both kernels must agree with each other AND with an independent
-  * Set-based Jaccard over the same shingle hashes. */
+/** Multi-byte UTF-8 fuzz for the pair-verify kernel. The kernel fuzz in
+  * VerifyKernelSpec draws from printable ASCII only; transcripts are full
+  * Unicode — CJK (3-byte), Cyrillic (2-byte) and emoji (4-byte, surrogate
+  * pairs in the JVM string) shift shingle boundaries onto every byte
+  * alignment. The kernel, fresh and through its memo, must agree with the
+  * sorted-array reference (Shingles.jaccardSorted and the SimHash distance
+  * over shinglesOf) AND with an independent Set-based Jaccard over the same
+  * shingle hashes. */
 class UnicodeKernelSpec extends AnyFunSuite {
 
   private val K = 8
@@ -24,11 +26,22 @@ class UnicodeKernelSpec extends AnyFunSuite {
     else (sa intersect sb).size.toDouble / (sa union sb).size
   }
 
+  private def reference(a: String, b: String): (Double, Int) = {
+    val sa = Shingles.shinglesOf(a, K, Seed)
+    val sb = Shingles.shinglesOf(b, K, Seed)
+    (Shingles.jaccardSorted(sa, sb),
+      SimHash64.hammingDist(SimHash64.fingerprint(sa), SimHash64.fingerprint(sb)))
+  }
+
+  /** One scratch for the whole suite: consecutive calls that repeat a side
+    * are served from the memo. */
+  private val memo = new PairVerify.Scratch
+
+  /** (fresh-scratch result, memo-scratch result) */
   private def both(a: String, b: String) = {
     val ua = UTF8String.fromString(a); val ub = UTF8String.fromString(b)
-    val m = PairVerify.computeWith(new PairVerify.Scratch(false), ua, ub, K, Seed, probe = false)
-    val p = PairVerify.computeWith(new PairVerify.Scratch(true), ua, ub, K, Seed, probe = true)
-    (m, p)
+    (PairVerify.computeWith(new PairVerify.Scratch, ua, ub, K, Seed),
+      PairVerify.computeWith(memo, ua, ub, K, Seed))
   }
 
   test("kernels agree with each other and the set oracle on multi-byte unicode") {
@@ -63,10 +76,14 @@ class UnicodeKernelSpec extends AnyFunSuite {
         }
         new String(arr, 0, arr.length)
       } else doc(5 + rnd.nextInt(200))
-      val (m, p) = both(a, b)
-      assert(m._1 === p._1, s"kernel jaccard disagreement on <$a> <$b>")
-      assert(m._2 === p._2, s"kernel simhash disagreement on <$a> <$b>")
-      assert(m._1 === oracle(a, b), s"kernel vs set-oracle on <$a> <$b>")
+      val ref = reference(a, b)
+      val (f, m) = both(a, b)
+      assert(f === ref, s"kernel vs reference on <$a> <$b>")
+      assert(m === ref, s"memo kernel vs reference on <$a> <$b>")
+      assert(f._1 === oracle(a, b), s"kernel vs set-oracle on <$a> <$b>")
+      // same A against a fresh B: side A is now a memo hit
+      val c = doc(5 + rnd.nextInt(200))
+      assert(both(a, c)._2 === reference(a, c), s"memo-hit kernel vs reference on <$a> <$c>")
     }
   }
 
@@ -77,9 +94,10 @@ class UnicodeKernelSpec extends AnyFunSuite {
       ("😀", "😁"),
       ("世界你好" * 40, "世界你好" * 40),
       ("п" * 3, "п" * 1000))) {
-      val (m, p) = both(a, b)
-      assert(m === p, s"kernel mismatch on <$a> <$b>")
-      assert(m._1 === oracle(a, b), s"oracle mismatch on <$a> <$b>")
+      val (f, m) = both(a, b)
+      assert(f === reference(a, b), s"kernel vs reference on <$a> <$b>")
+      assert(m === f, s"memo kernel mismatch on <$a> <$b>")
+      assert(f._1 === oracle(a, b), s"oracle mismatch on <$a> <$b>")
     }
   }
 }

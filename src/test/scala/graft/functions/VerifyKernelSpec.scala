@@ -3,18 +3,33 @@ package graft.functions
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{LongHashSet, Shingles}
+import graft.core.{LongHashSet, Shingles, SimHash64}
 
-/** The two pair-verify kernels (sorted-merge intersect vs hash-set probe)
-  * must be bit-identical on every input: same jaccard double, same simhash
-  * distance — q09-q12's hash-exact oracles ride on this. */
+/** The pair-verify kernel (hash-set probe intersect behind a last-seen
+  * memo) must equal the reference computation on every input: Jaccard of
+  * the sorted shingle arrays (Shingles.jaccardSorted over shinglesOf) and
+  * the Hamming distance of their SimHash fingerprints — same double, same
+  * distance. q09-q12's hash-exact oracles ride on this. */
 class VerifyKernelSpec extends AnyFunSuite {
 
-  private def both(a: String, b: String, k: Int = 8, seed: Long = 9001L) = {
-    val ua = UTF8String.fromString(a); val ub = UTF8String.fromString(b)
-    val m = PairVerify.computeWith(new PairVerify.Scratch(false), ua, ub, k, seed, probe = false)
-    val p = PairVerify.computeWith(new PairVerify.Scratch(true), ua, ub, k, seed, probe = true)
-    (m, p)
+  private val K = 8
+  private val Seed = 9001L
+
+  /** Reference (jaccard, simhash distance) from the driver-side shingler. */
+  private def reference(a: String, b: String): (Double, Int) = {
+    val sa = Shingles.shinglesOf(a, K, Seed)
+    val sb = Shingles.shinglesOf(b, K, Seed)
+    (Shingles.jaccardSorted(sa, sb),
+      SimHash64.hammingDist(SimHash64.fingerprint(sa), SimHash64.fingerprint(sb)))
+  }
+
+  private def kernel(s: PairVerify.Scratch, a: String, b: String): (Double, Int) =
+    PairVerify.computeWith(s, UTF8String.fromString(a), UTF8String.fromString(b), K, Seed)
+
+  /** Kernel on a fresh scratch vs the reference; exact equality. */
+  private def check(a: String, b: String): Unit = {
+    val got = kernel(new PairVerify.Scratch, a, b)
+    assert(got === reference(a, b), s"kernel vs reference on ('${a.take(40)}', '${b.take(40)}')")
   }
 
   test("kernels agree on random near-dup and unrelated docs") {
@@ -31,34 +46,32 @@ class VerifyKernelSpec extends AnyFunSuite {
         (0 until 1 + rnd.nextInt(6)).foreach(_ => c(rnd.nextInt(c.length)) = (32 + rnd.nextInt(95)).toChar)
         new String(c)
       }
-      for (other <- Seq(near, doc(50 + rnd.nextInt(500)), base)) {
-        val (m, p) = both(base, other)
-        assert(m._1 === p._1) // exact double equality: same inter/union ints
-        assert(m._2 === p._2)
-      }
+      for (other <- Seq(near, doc(50 + rnd.nextInt(500)), base)) check(base, other)
     }
   }
 
   test("kernels agree on edge shapes: empty, 1-byte, shorter-than-k, repeated content") {
     for ((a, b) <- Seq(("", ""), ("", "xyz"), ("a", "a"), ("a", "b"),
         ("abc", "abc"), ("abc", "abd"), ("aaaaaaaaaaaaaaaa", "aaaaaaaaaaaaaaab"),
-        ("ab" * 40, "ab" * 40 + "c"))) {
-      val (m, p) = both(a, b)
-      assert(m === p, s"mismatch on ('$a','$b')")
+        ("ab" * 40, "ab" * 40 + "c"),
+        ("the quick brown fox jumps", "the quick brown fox jumped"))) {
+      check(a, b)
     }
   }
 
   test("kernels agree through the memo: repeated side A over a pair run") {
-    val sm = new PairVerify.Scratch(false)
-    val sp = new PairVerify.Scratch(true)
-    val a = UTF8String.fromString("the quick brown fox jumps over the lazy dog " * 20)
+    // one scratch across the run: side A hits its memo on every row after
+    // the first, side B misses; an interleaved repeat of an earlier B and a
+    // swap of the sides exercise memo invalidation too
+    val s = new PairVerify.Scratch
+    val a = "the quick brown fox jumps over the lazy dog " * 20
     val rnd = new java.util.Random(3)
-    (0 until 50).foreach { i =>
-      val b = UTF8String.fromString(
-        "the quick brown fox jumps over the lazy dog " * 20 + ("x" * rnd.nextInt(10)) + i)
-      val m = PairVerify.computeWith(sm, a, b, 8, 9001L, probe = false)
-      val p = PairVerify.computeWith(sp, a, b, 8, 9001L, probe = true)
-      assert(m === p)
+    val bs = (0 until 50).map(i =>
+      "the quick brown fox jumps over the lazy dog " * 20 + ("x" * rnd.nextInt(10)) + i)
+    bs.zipWithIndex.foreach { case (b, i) =>
+      assert(kernel(s, a, b) === reference(a, b), s"row $i")
+      assert(kernel(s, a, bs(i / 2)) === reference(a, bs(i / 2)), s"repeat $i")
+      assert(kernel(s, b, a) === reference(b, a), s"swap $i")
     }
   }
 
@@ -69,10 +82,9 @@ class VerifyKernelSpec extends AnyFunSuite {
       (0 until 600000).foreach(_ => sb.append((32 + rnd.nextInt(95)).toChar)) // > 512k RetainCap
       sb.toString
     }
-    val (m, p) = both(big, big.substring(0, 599000) + "zz")
-    assert(m === p)
-    val (m2, p2) = both(big, big)
-    assert(m2 === p2 && m2._1 === 1.0)
+    check(big, big.substring(0, 599000) + "zz")
+    check(big, big)
+    assert(reference(big, big)._1 === 1.0)
   }
 
   test("LongHashSet: add/contains/dedup, zero element, reuse via reset") {

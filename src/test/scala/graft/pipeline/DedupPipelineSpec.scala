@@ -70,9 +70,10 @@ class DedupPipelineSpec extends AnyFunSuite {
     assert(recall >= 0.99, s"recall $recall below bar (truth=${truth.pairs.size})")
   }
 
+  lazy val turns2 = Transcripts.generate(2000)
+  lazy val tdf2 = Transcripts.asDataFrame(spark, turns2, 16).cache()
+
   test("t2-scale: recall >= 0.99 vs exact oracle at 2000 conversations") {
-    val turns2 = Transcripts.generate(2000)
-    val tdf2 = Transcripts.asDataFrame(spark, turns2, 16)
     val truth = graft.core.OracleDedup.run(Transcripts.docsLocal(turns2), cfg)
     assert(truth.pairs.size > 100, s"expected a rich truth set, got ${truth.pairs.size}")
     val assignments = DedupPipeline.run(tdf2, cfg).collect()
@@ -80,6 +81,24 @@ class DedupPipelineSpec extends AnyFunSuite {
     val recall = graft.core.OracleDedup.recall(truth.pairs, assignments)
     info(s"t2 truth pairs=${truth.pairs.size}, recall=$recall")
     assert(recall >= 0.99, s"t2 recall $recall below bar")
+  }
+
+  test("run and the checkpointed runner assign identical clusters at 2000 conversations") {
+    // DedupPipeline.run persists its intermediates; CheckpointedDedup.run
+    // writes each stage to parquet and reads it back. Both chain the same
+    // stage functions, so the assignments must match exactly, including
+    // on the salted banding path that persists signatures.
+    for (c <- Seq(cfg, cfg.copy(bandSalt = 4))) {
+      val viaRun = DedupPipeline.run(tdf2, c).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val root = java.nio.file.Files.createTempDirectory("graft-parity").toString
+      val viaCkpt = new CheckpointedDedup(new ParquetTableIO(root), c, "parity")
+        .run(tdf2).collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(viaRun.size === 2000)
+      assert(viaRun.values.toSet.size < 2000, "corpus must produce merged clusters")
+      assert(viaRun === viaCkpt, s"bandSalt=${c.bandSalt}")
+      DedupPipeline.unpersistIntermediates(spark)
+    }
   }
 
   test("entry(): flagship query returns rows") {
@@ -237,18 +256,5 @@ class DedupPipelineSpec extends AnyFunSuite {
       if x < y
     } yield (x, y)).toSet
     assert(out === expected)
-  }
-
-  test("candidatePairsAgg (measured alternative) emits the identical pair set") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(5)
-    val rows = (1 to 800).map { i =>
-      (f"c$i%04d", i % 7, rnd.nextInt(120).toLong) // collide into ~120 buckets
-    }
-    val bands = rows.toDF("conv_id", "band_idx", "band_key")
-    val w = DedupPipeline.candidatePairs(bands, cfg)
-    val a = DedupPipeline.candidatePairsAgg(bands, cfg)
-    assert(w.exceptAll(a).count() === 0L)
-    assert(a.exceptAll(w).count() === 0L)
   }
 }
